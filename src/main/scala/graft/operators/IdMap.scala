@@ -83,20 +83,22 @@ object IdMap {
     */
   private def assignSorted(map: DataFrame, fresh: DataFrame): DataFrame = {
     val spark = fresh.sparkSession
-    val maxId = map.agg(coalesce(max(col(ID)), lit(0L))).head().getLong(0)
     // fail FAST on the double-encoding trap the iri ∪ id guard cannot
     // see: an EXISTING numeric key (say "5" → 1) whose digits land in id
     // space ABOVE the current max will eventually collide with an
     // assigned id, and a later re-encode of that id would match the key
     // and silently remap rows to the wrong entity. The guard only blocks
     // keys colliding with ids that exist at key-ADD time; this closes
-    // the other direction (range-free — one narrow map scan, no count of
-    // the fresh side, so the bulk path keeps its two-pass contract).
-    val clash = map.filter(col(KEY).rlike("^[0-9]{1,18}$"))
-      .filter(col(KEY).cast("long") > maxId)
-      .limit(1).collect()
-    require(clash.isEmpty,
-      s"id-map holds numeric key '${clash.headOption.map(_.getString(0)).getOrElse("?")}' " +
+    // the other direction. ONE narrow aggregate over the map returns the
+    // max id AND the largest numeric key (with its text, for the error)
+    // — a single driver probe, no count of the fresh side, so the bulk
+    // path keeps its two-pass contract
+    val numericKey = when(col(KEY).rlike("^[0-9]{1,18}$"), col(KEY).cast("long"))
+    val probe = map.agg(coalesce(max(col(ID)), lit(0L)), max(numericKey),
+      max_by(col(KEY), numericKey)).head()
+    val maxId = probe.getLong(0)
+    require(probe.isNullAt(1) || probe.getLong(1) <= maxId,
+      s"id-map holds numeric key '${probe.getString(2)}' " +
         s"above the current max id $maxId — a future assignment would collide with " +
         "it and re-encoding would remap rows to the wrong entity; renumber or " +
         "namespace the keys")

@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sinks.Sinks
 import graft.sources.SnapshotStore
-import graft.util.RunLock
+import graft.util.{Concurrent, RunLock}
 
 /** The reference's outer run shape (`main_pls.py:59-227`): lock → metadata
   * start → stages → metadata end → snapshot write → artifact upload →
@@ -48,6 +48,17 @@ object EtlRun {
 
   /** Execute `stages` (name -> frame to persist) and publish the artifact.
     * `now` is injectable for the exact-timestamp tests.
+    *
+    * Write order: every stage table CONCURRENTLY (one driver thread per
+    * table, see [[graft.util.Concurrent]] — the writes are independent
+    * Spark actions, and one after another they left the cores idle
+    * between small jobs), then `metadata`, then the commit marker.
+    * `metadata` carries the next run's watermark, so it is written only
+    * after every data table succeeded; the marker makes the run dir a
+    * restore point only once everything is on disk. If any table write
+    * fails, `run` waits for the other writes to end and rethrows: no
+    * metadata, no marker, no upload, no notification, and the lock is
+    * released only after no write is still running.
     */
   def run(spark: SparkSession, config: Config, lock: RunLock, store: SnapshotStore,
           artifacts: Sinks.ArtifactStore, notifier: Sinks.Notifier, topic: String,
@@ -79,14 +90,15 @@ object EtlRun {
       // K4 — run metadata rides inside the snapshot (next run's watermark I1)
       import spark.implicits._
       val metadata = Seq((startStr, endStr)).toDF("start_time", "end_time")
-      // deterministic order with the watermark-carrying metadata table
-      // LAST (unordered Map iteration could land it first, advancing the
-      // watermark before the data a crash would then lose), then the
-      // commit marker: latestRun only restores from committed runs, so a
+      // data tables concurrently; the watermark-carrying metadata table
+      // strictly after them (written earlier, it would advance the
+      // watermark past data a crash would then lose), then the commit
+      // marker: latestRun only restores from committed runs, so a
       // partial run dir can never become the restore point
-      (frames.toSeq.sortBy(_._1) :+ ("metadata" -> metadata)).foreach { case (table, df) =>
-        store.write(df, runId, table)
-      }
+      Concurrent.all(frames.toSeq.sortBy(_._1).map { case (table, df) =>
+        () => store.write(df, runId, table)
+      })
+      store.write(metadata, runId, "metadata")
       store.commit(spark, runId)
 
       // K2 → K3, strictly in this order

@@ -65,14 +65,22 @@ object PlsPipeline {
   /** M6 ×5 — encode the five entity PKs to stable integers, threading the
     * carried-forward id maps (reference `pls/tables.py:934-938`).
     * Returns encoded entities plus the updated maps (to persist).
+    *
+    * The reference encodes one entity after another; here each
+    * `IdMap.extendAndEncode` runs on its own driver thread
+    * ([[graft.util.Concurrent]]), because its assignment jobs (the map
+    * probe, the range-sort sample, the `zipWithIndex` pass) are eager and
+    * small, and in sequence they left the cores idle between jobs. The
+    * encodes are independent — an entity's new ids depend only on its own
+    * map and keys — so the assigned ids are exactly the sequential ones.
+    * Returns once every encode has ended; the first failure is rethrown.
     */
   def encodeEntityKeys(entities: Map[String, DataFrame], maps: Map[String, DataFrame],
                        pkCols: Map[String, String]): (Map[String, DataFrame], Map[String, DataFrame]) = {
-    val results = entities.map { case (name, df) =>
-      val pk = pkCols(name)
-      val (encoded, newMap) = IdMap.extendAndEncode(maps(name), df, pk)
-      name -> (encoded, newMap)
-    }
+    val names = entities.keys.toSeq
+    val results = names.zip(graft.util.Concurrent.all(names.map { name =>
+      () => IdMap.extendAndEncode(maps(name), entities(name), pkCols(name))
+    })).toMap
     (results.map { case (n, (e, _)) => n -> e }, results.map { case (n, (_, m)) => n -> m })
   }
 

@@ -43,7 +43,7 @@ class SnapshotStore(root: String) {
     * run dirs. A root with no markers at all (layouts written by direct
     * [[write]] calls, pre-marker snapshots) prefers the newest run that
     * carries a `metadata` table — metadata is the LAST table
-    * `EtlRun.persist` writes, so on a pre-marker ETL root its presence is
+    * `EtlRun.run` writes, so on a pre-marker ETL root its presence is
     * the commit signal, and the one NEW run that crashed mid-write atop
     * old complete snapshots no longer wins the restore (the partial-
     * restore bug the marker was added to prevent). Only a root where no

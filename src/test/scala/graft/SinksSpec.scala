@@ -92,6 +92,50 @@ class SinksSpec extends SparkSpec {
     lock.acquire(); lock.release() // lock was released by the failed run
   }
 
+  test("EtlRun atomicity: a table write failing mid-run leaves no metadata, no marker, no running write") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("etlrun-write-fail").toString
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val store = new SnapshotStore(root) {
+      override def write(df: org.apache.spark.sql.DataFrame, runId: String, table: String): Unit = {
+        inFlight.incrementAndGet()
+        try super.write(df, runId, table) finally { inFlight.decrementAndGet(); () }
+      }
+    }
+    val artifacts = new Sinks.FakeArtifactStore
+    val notifier = new Sinks.CollectingNotifier()
+    val lock = new FileRunLock("write-fail-etl", Files.createTempDirectory("lock-write-fail"))
+    val config = EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes")
+    val geocodes = Seq(("g1", "p1")).toDF("geocode_id", "address_pid")
+    val times1 = Iterator(t0, t0.plusSeconds(60), t0.plusSeconds(61))
+    val committed = EtlRun.run(spark, config, lock, store, artifacts, notifier, "topic",
+      () => Map("geocodes" -> geocodes), now = () => times1.next())
+
+    // "poisoned" fails inside a task of its own write; "slow" is still
+    // writing when it does, and run must wait for it before returning
+    import org.apache.spark.sql.functions.{assert_true, lit, udf}
+    val nap = udf { (i: Long) => Thread.sleep(2000); i }
+    val slow = spark.range(0, 2, 1, 2).select(nap($"id").as("id"))
+    val poisoned = spark.range(0, 3, 1, 1).toDF()
+      .where(assert_true($"id" < 2, lit("poisoned row in stage write")).isNull)
+    val times2 = Iterator(t0.plusSeconds(120), t0.plusSeconds(180))
+    val failedRunId = Sinks.brisbaneTimestamp(t0.plusSeconds(180))
+    val e = intercept[Exception] {
+      EtlRun.run(spark, config, lock, store, artifacts, notifier, "topic",
+        () => Map("geocodes" -> geocodes, "poisoned" -> poisoned, "slow" -> slow),
+        now = () => times2.next())
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("poisoned row in stage write")))
+    assert(inFlight.get == 0) // every write had ended when run returned
+    assert(new java.io.File(store.tablePath(failedRunId, "slow"), "_SUCCESS").exists())
+    assert(!new java.io.File(store.tablePath(failedRunId, "metadata")).exists())
+    assert(!store.isCommitted(spark, failedRunId))
+    assert(store.latestRun(spark).contains(committed.runId))
+    assert(artifacts.uploads.size == 1 && notifier.records.size == 1) // the first run's only
+    lock.acquire(); lock.release() // released by the failed run
+  }
+
   test("layer schema drift: field renames resolve; missing fields raise") {
     val s1 = LayerSchema.geocodeSchema(Set("objectid", "pid", "type", "last_edited_date"))
     assert(s1.addressPidField == "pid" && s1.geocodeTypeField == "type")
