@@ -850,9 +850,10 @@ object Dedup {
   }
 
   /** Default union-find gate for [[dedupClusters]], derived from the
-    * driver's ACTUAL heap rather than fixed: the r15 `CcCrossover`
-    * measurement puts the edge collect at ~128 bytes per symmetrized edge
-    * (~0.5 GB of Row+HashMap at the 2^22 ceiling, on a 16 g driver), so
+    * driver's ACTUAL heap rather than fixed: the r15 measurement
+    * (docs/SCALE.md, "Round 15") puts the edge collect at ~128 bytes per
+    * symmetrized edge (~0.5 GB of Row+HashMap at the 2^22 ceiling, on a
+    * 16 g driver), so
     * the derived gate spends at most 1/8 of `Runtime.maxMemory` on the
     * collect and never exceeds the measured 2^22 ceiling. A driver left on
     * Spark's default ~1 g heap therefore derives ~2^20 — the pre-r15 gate
@@ -886,8 +887,8 @@ object Dedup {
     // round-trips on no data; above the gate (billions of edges at 100 TB)
     // the distributed pointer-doubling loop below is the path.
     //
-    // The 2^22 CEILING is MEASURED, not argued (r15, `CcCrossover`
-    // harness, chain-cluster graphs, min-of-3 alternating A/B): driver
+    // The 2^22 CEILING is MEASURED, not argued (r15, docs/SCALE.md "Round
+    // 15" table, chain-cluster graphs, min-of-3 alternating A/B): driver
     // union-find beats the propagation loop 7× at 2^19 symmetrized edges
     // (2.98 vs 21.66 s) and still 2× at 2^22 (14.73 vs 28.97 s); the TIME
     // crossover extrapolates to ~2^24 (local grows ~3.5 s/M edges over a

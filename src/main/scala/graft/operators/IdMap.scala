@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
   *     cross-run cache reuse for every plan the map participates in).
   *     The stability holds for maps built from [[empty]] or read back
   *     from storage; a map RETURNED by [[extend]] embeds that run's
-  *     assignment RDD and is plan-distinct — in-memory chains release
-  *     per-run deltas via [[extendManaged]] (see its scaladoc);
+  *     assignment RDD and is plan-distinct — an in-memory chain drops
+  *     its per-run deltas with `SparkEntry.releaseSharedCaches()`;
   *   - ids are the rank in the key-sorted order — Spark sorts strings by
   *     UTF-8 binary bytes (UTF8String ordering), which is also the order
   *     [[extendBulk]] and the DuckDB oracle's `row_number() OVER (ORDER
@@ -121,26 +121,14 @@ object IdMap {
     * entry is reusable only within that run. That is the intended shape
     * for one-shot and repeated-equal-input calls (the map input itself —
     * [[empty]] or a map read back from storage — is canonically stable);
-    * a long-lived loop that chains maps in memory should use
-    * [[extendManaged]] and release each run's delta after materializing
-    * the new map, or drop everything at once via
-    * `SparkEntry.releaseSharedCaches()`.
+    * a long-lived loop that chains maps in memory drops the per-run
+    * deltas with `SparkEntry.releaseSharedCaches()`. Release before
+    * materialization is still correct — the assignment jobs already ran
+    * at call time; later actions recompute the delta through lineage.
     */
-  def extend(map: DataFrame, df: DataFrame, keyCol: String): DataFrame =
-    extendManaged(map, df, keyCol)._1
-
-  /** [[extend]] with the delta cache's release handle exposed (the same
-    * managed idiom as `Dedup.capBucketsManaged`): steady-state incremental
-    * loops — `map = extend(map, batch, k)` per run — register one delta
-    * entry per run that no later run can reuse (the map's plan is
-    * RDD-distinct per run, see [[extend]]), so the loop releases it after
-    * materializing the new map. Release BEFORE materialization is still
-    * correct — the assignment jobs already ran at call time; later actions
-    * just recompute the delta through lineage instead of reading cache.
-    */
-  def extendManaged(map: DataFrame, df: DataFrame, keyCol: String): (DataFrame, () => Unit) = {
-    val (fresh, release) = graft.util.Caching.acquire(freshKeys(map, df, keyCol))
-    (map.select(KEY, ID).unionByName(assignSorted(map, fresh)), release)
+  def extend(map: DataFrame, df: DataFrame, keyCol: String): DataFrame = {
+    val fresh = graft.util.Caching.ensurePersisted(freshKeys(map, df, keyCol))
+    map.select(KEY, ID).unionByName(assignSorted(map, fresh))
   }
 
   /** Rewrite `df(keyCol)` text keys to their integer ids using (an already
@@ -197,32 +185,20 @@ object IdMap {
     * before encoding (`pls/tables.py:934-938`) — this is the same
     * staging, minus the disk round-trip when it fits in memory.
     *
-    * The persist is GUARDED (`Caching.acquire`): re-invoking over an
+    * The persist is GUARDED (`Caching.ensurePersisted`): re-invoking over an
     * equal plan — an entity chain whose frames share upstream plans, a
     * bench's warm-up + timed passes — reuses the existing cache entry
     * instead of re-registering it (the `CacheManager: Asked to cache
     * already cached data` churn this replaced). Entries are left for LRU
     * eviction (recompute-on-eviction keeps it correct); a caller that
-    * wants deterministic release uses [[extendAndEncodeManaged]], whose
-    * handle releases BOTH layers through the ownership registry — never
-    * a direct `df.unpersist()`, which would bypass ownership and leave a
+    * wants deterministic release calls `SparkEntry.releaseSharedCaches()`,
+    * which drops BOTH layers through the ownership registry — never a
+    * direct `df.unpersist()`, which would bypass ownership and leave a
     * stale registry ref.
     */
   def extendAndEncode(map: DataFrame, df: DataFrame, keyCol: String): (DataFrame, DataFrame) = {
-    val (enc, m2, _) = extendAndEncodeManaged(map, df, keyCol)
-    (enc, m2)
-  }
-
-  /** [[extendAndEncode]] with a composed release handle over BOTH cache
-    * layers it registers (the entity frame and the extend delta) — the
-    * loop-shape variant, mirroring [[extendManaged]]. Release after
-    * materializing the encoded frame and the new map; each layer's handle
-    * no-ops if another consumer registered the entry first.
-    */
-  def extendAndEncodeManaged(map: DataFrame, df: DataFrame, keyCol: String)
-      : (DataFrame, DataFrame, () => Unit) = {
-    val (cached, relEntity) = graft.util.Caching.acquire(df)
-    val (m2, relDelta) = extendManaged(map, cached, keyCol)
-    (encode(cached, m2, keyCol), m2, () => { relDelta(); relEntity() })
+    val cached = graft.util.Caching.ensurePersisted(df)
+    val m2 = extend(map, cached, keyCol)
+    (encode(cached, m2, keyCol), m2)
   }
 }

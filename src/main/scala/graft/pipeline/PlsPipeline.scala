@@ -46,22 +46,6 @@ object PlsPipeline {
     (kept, dropped)
   }
 
-  /** A6 the Spark-native way: the dropped-rows count rides the SAME job as
-    * the kept-rows materialization via `Dataset.observe` — the reference's
-    * counted, sampled warning without a second pass or an eager action.
-    * `observation.get` blocks until the first action on the returned frame
-    * completes, then holds Map("n_dropped" -> …).
-    */
-  def pruneAddressesWithMetric(addresses: DataFrame, pidMap: DataFrame)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val flagged = addresses.join(
-      pidMap.select(col("address_iri")).distinct().withColumn("__mapped", lit(true)),
-      Seq("address_iri"), "left")
-      .observe(obs, sum(when(col("__mapped").isNull, 1L).otherwise(0L)).as("n_dropped"))
-    (flagged.filter(col("__mapped").isNotNull).drop("__mapped"), obs)
-  }
-
   /** M6 ×5 — encode the five entity PKs to stable integers, threading the
     * carried-forward id maps (reference `pls/tables.py:934-938`).
     * Returns encoded entities plus the updated maps (to persist).
@@ -125,6 +109,7 @@ object PlsPipeline {
     // cost self-contained instead of depending on which sibling query
     // happened to fill the cache first. Lifecycle as every shared layer:
     // LRU eviction recomputes from lineage; releaseSharedCaches drops.
+    // no `observe` here: its fresh UUID name makes each call's plan, so its cache entry, distinct
     val (addrKept, dropped) = pruneAddressesWithoutPid(inputs.addresses, pidMap)
     val kept = graft.util.Caching.ensurePersisted(addrKept)
     val geocodes = backfillAndPruneGeocodes(geoBase, kept)

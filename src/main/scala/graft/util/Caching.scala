@@ -142,12 +142,6 @@ object Caching {
     */
   private[graft] def registeredCount: Int = monitor.synchronized(owned.size())
 
-  /** Unpersist every entry this guard registered — the deterministic drop
-    * for a long-lived session done with the engine's shared frames
-    * (shingle bases, the LSH pair graph, id-map deltas). Safe to call at
-    * any time: lineage stays valid, so later queries recompute (and
-    * re-register) what they need.
-    */
   /** Drop the block-store registration behind an eagerly
     * `localCheckpoint`ed frame. localCheckpoint persists at the RDD
     * level — it never enters the CacheManager, so neither the acquire
@@ -166,6 +160,12 @@ object Caching {
       case _ => ()
     }
 
+  /** Unpersist every entry this guard registered — the deterministic drop
+    * for a long-lived session done with the engine's shared frames
+    * (shingle bases, the LSH pair graph, id-map deltas). Safe to call at
+    * any time: lineage stays valid, so later queries recompute (and
+    * re-register) what they need.
+    */
   def releaseAll(): Unit = monitor.synchronized {
     // unpersist inside the monitor: a concurrent acquire must not observe
     // an entry as cached after its registration has been cleared (it

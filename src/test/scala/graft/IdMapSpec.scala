@@ -133,23 +133,28 @@ class IdMapSpec extends SparkSpec {
     assert(ok.count() == 3) // "2" is an id-space string: no fresh key minted
   }
 
-  test("extendManaged: the per-run delta cache releases; results survive release") {
-    // the steady-state loop shape — map = extend(map, batch) per run —
-    // registers one delta entry per run that no later run's plan can reuse
-    // (the map embeds that run's assignment RDD); the managed handle is how
-    // a loop drops each run's entry instead of accumulating registrations
-    val (m1, rel1) = IdMap.extendManaged(IdMap.empty(spark), keysDf(Seq("iri/a", "iri/b")), "pk")
-    val (m2, rel2) = IdMap.extendManaged(m1, keysDf(Seq("iri/b", "iri/c")), "pk")
-    val before = m2.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    rel1(); rel2()
-    // post-release, actions recompute through lineage — same assignments
-    assert(m2.collect().map(r => (r.getString(0), r.getLong(1))).toSet == before)
-    assert(before.map(_._1) == Set("iri/a", "iri/b", "iri/c"))
+  test("extendAndEncode over chained maps: results survive releaseSharedCaches") {
+    val s = spark; import s.implicits._
+    def entity(keys: String*) = keys.map(k => (k, k)).toDF("pk", "src")
+    def encPairs(enc: org.apache.spark.sql.DataFrame) =
+      enc.select("src", "pk").as[(String, Long)].collect().toSet
+    def mapPairs(map: org.apache.spark.sql.DataFrame) =
+      map.as[(String, Long)].collect().toSet
+    // the steady-state loop shape: the second map chains on the first,
+    // so each call registers an entity entry and a delta entry
+    val (e1, e2) = (entity("iri/b", "iri/a"), entity("iri/c", "iri/b"))
+    val (enc1, m1) = IdMap.extendAndEncode(IdMap.empty(spark), e1, "pk")
+    val (enc2, m2) = IdMap.extendAndEncode(m1, e2, "pk")
+    val before = (encPairs(enc1), encPairs(enc2), mapPairs(m1), mapPairs(m2))
+    assert(before._4 == Set("iri/a" -> 1L, "iri/b" -> 2L, "iri/c" -> 3L))
+    assert(before._2 == Set("iri/c" -> 3L, "iri/b" -> 2L))
 
-    val (enc, map, relAll) = IdMap.extendAndEncodeManaged(
-      IdMap.empty(spark), keysDf(Seq("iri/x", "iri/y")), "pk")
-    val encRows = enc.collect().map(_.getLong(0)).toSet
-    relAll()
-    assert(map.count() == 2 && encRows == Set(1L, 2L))
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(e1.storageLevel != none && e2.storageLevel != none)
+    SparkEntry.releaseSharedCaches()
+    assert(e1.storageLevel == none && e2.storageLevel == none)
+    // post-release, actions recompute through lineage — same assignments
+    assert((encPairs(enc1), encPairs(enc2), mapPairs(m1), mapPairs(m2)) == before)
+    assert(graft.util.Caching.registeredCount == 0)
   }
 }
