@@ -39,8 +39,8 @@ object ProfileQ {
         val si = sc.stageInfo
         val m = si.taskMetrics
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
-        stages.put((si.stageId, si.attemptNumber),
-          StageRow(si.stageId, si.attemptNumber, si.name, si.numTasks, wall,
+        stages.put((si.stageId, si.attemptNumber()),
+          StageRow(si.stageId, si.attemptNumber(), si.name, si.numTasks, wall,
             m.executorRunTime, m.executorCpuTime / 1000000,
             m.executorDeserializeTime, m.jvmGCTime, m.resultSerializationTime,
             m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,

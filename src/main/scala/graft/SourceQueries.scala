@@ -57,6 +57,7 @@ object SourceQueries {
     store.write(Tables.nation(s, d).filter(org.apache.spark.sql.functions.col("n_nationkey") < 10),
       "run_a", "nation")
     store.write(Tables.nation(s, d), "run_b", "nation")
+    Seq("run_a", "run_b").foreach(store.commit(s, _))
     val latest = store.latestRun(s).getOrElse(sys.error("no snapshot written"))
     store.read(s, latest, "nation")
   }

@@ -82,7 +82,12 @@ object Classifier {
   private def rndHalfUp(x: Double): Long =
     BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** Real features ∪ the INTERCEPT as a virtual feature at index
+  /** The labeled, bias-augmented, id-partitioned feature frame
+    * `(id, b, cnt, n_feats, __y)` — built once per train(+score) pass
+    * and guard-persisted; every gradient iteration AND the fused scoring
+    * tail read this one frame.
+    *
+    * Real features ∪ the INTERCEPT as a virtual feature at index
     * `buckets` with cnt = n_feats: the document logit is
     * z = Σ cnt·w / 10⁶ / n_feats, so a bias row weighted n_feats
     * contributes exactly w_bias/10⁶ to z, its gradient through the
@@ -93,23 +98,6 @@ object Classifier {
     * starts at the base rate, where a class-independent bucket's
     * expected gradient is ≈ 0 and the rate budget goes to
     * discriminative buckets.
-    */
-  private def withBias(feats: DataFrame, nf: DataFrame, buckets: Int,
-                       idCol: String): DataFrame =
-    feats.unionByName(
-      nf.select(col(idCol), lit(buckets.toLong).as("b"), col("n_feats").as("cnt")))
-
-  /** Train `iters` preconditioned full-batch gradient steps (step i
-    * uses rate lr·decay^(i−1)) from zero feature weights and the
-    * analytic log-odds intercept; returns the micro-unit weight vector
-    * (length = `buckets` + 1, last slot the intercept). Training is
-    * EAGER like BPE: the driver loop runs one bounded-size collect per
-    * iteration; everything corpus-sized stays distributed.
-    */
-  /** The labeled, bias-augmented, id-partitioned feature frame
-    * `(id, b, cnt, n_feats, __y)` — built once per train(+score) pass
-    * and guard-persisted; every gradient iteration AND the fused scoring
-    * tail read this one frame.
     */
   private def acquireFeatsY(docs: DataFrame, label: Column, buckets: Int,
                             idCol: String, textCol: String): (DataFrame, () => Unit) = {
@@ -159,7 +147,14 @@ object Classifier {
     finally release()
   }
 
-  /** The driver training loop over an acquired [[acquireFeatsY]] frame. */
+  /** Train `iters` preconditioned full-batch gradient steps (step i
+    * uses rate lr·decay^(i−1)) from zero feature weights and the
+    * analytic log-odds intercept over an acquired [[acquireFeatsY]]
+    * frame; returns the micro-unit weight vector (length = `buckets` + 1,
+    * last slot the intercept). Training is EAGER like BPE: the driver
+    * loop runs one bounded-size collect per iteration; everything
+    * corpus-sized stays distributed.
+    */
   private def trainOn(featsY: DataFrame, iters: Int, buckets: Int,
                       lr: Double, decay: Double, idCol: String,
                       batchPpm: Int): Array[Long] = {

@@ -45,7 +45,10 @@ object LayerSchema {
     * scan) when the watermark column is gone.
     */
   def whereClause(schema: GeocodeLayerSchema, esriDate: Option[String]): String =
-    (esriDate, schema.lastEditedField) match {
+    watermarkClause(schema.lastEditedField, esriDate)
+
+  private def watermarkClause(lastEditedField: Option[String], esriDate: Option[String]): String =
+    (esriDate, lastEditedField) match {
       case (Some(d), Some(f)) => s"$f >= DATE '$d'"
       case _ => "1=1"
     }
@@ -90,10 +93,7 @@ object LayerSchema {
     * the watermark column is gone (`address_iri_pid_map.py:69-81`).
     */
   def whereClause(schema: IriPidLayerSchema, esriDate: Option[String]): String =
-    (esriDate, schema.lastEditedField) match {
-      case (Some(d), Some(f)) => s"$f >= DATE '$d'"
-      case _ => "1=1"
-    }
+    watermarkClause(schema.lastEditedField, esriDate)
 
   /** Canonical feature normalization: resolved physical names → the stable
     * (objectid, address_iri, address_pid) string columns downstream tables

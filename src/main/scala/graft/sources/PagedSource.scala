@@ -79,9 +79,9 @@ trait PageFetcher extends Serializable {
   def count(spec: ScanSpec): Long
   /** Fetch rows [offset, offset+limit) matching `spec`, in `spec.columns`
     * order (full schema order when unspecified). The returned iterator is
-    * drained eagerly by `PagedSource.read` inside its retry scope, so lazy
-    * implementations still get backoff/token-refresh coverage for errors
-    * thrown during iteration.
+    * drained eagerly inside the retry scope (`PagedSource.retriedPage`),
+    * so lazy implementations still get backoff/token-refresh coverage for
+    * errors thrown during iteration.
     */
   def fetch(offset: Long, limit: Int, spec: ScanSpec): Iterator[Row]
   /** Re-authenticate after a token-expiry failure (ESRI code 498). */
@@ -99,28 +99,40 @@ object PagedSource {
       case Some(cols) => StructType(cols.map(schema(_)))
       case None => schema
     }
-    // the driver-side count runs under the SAME retry/re-auth contract as
-    // every page fetch (I6): a token that expired before read() — or one
-    // transient 5xx on the count request — must not fail the whole scan.
-    // The V2 twin has retried this exact call since its reader landed.
-    val total = Retry.withBackoff(maxTimeSeconds = retryMaxSeconds,
-      onTokenExpired = () => fetcher.refreshAuth()) {
-      fetcher.count(spec)
-    }
+    val total = retriedCount(fetcher, spec, retryMaxSeconds)
     if (total == 0)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], prunedSchema)
     val rdd = spark.range(0, total, pageSize).rdd.flatMap { offset =>
-      Retry.withBackoff(maxTimeSeconds = retryMaxSeconds,
-        onTokenExpired = () => fetcher.refreshAuth()) {
-        // materialize the page INSIDE the retried body: a fetcher that
-        // streams rows lazily (or throws TokenExpired from next()) would
-        // otherwise be consumed by Spark AFTER withBackoff returned,
-        // escaping both the backoff and the token-refresh path
-        fetcher.fetch(offset, pageSize, spec).toVector
-      }
+      retriedPage(fetcher, offset, pageSize, spec, retryMaxSeconds)
     }
     spark.createDataFrame(rdd, prunedSchema)
   }
+
+  /** The count request under I6: exponential backoff, and a token expiry
+    * re-authenticates then retries. Every count, driver-side here and in
+    * the V2 scan's planning and count-pushdown reader, goes through this:
+    * a token that expired before the scan, or one transient failure on
+    * the count, must not fail the whole scan.
+    */
+  private[sources] def retriedCount(fetcher: PageFetcher, spec: ScanSpec,
+                                    retryMaxSeconds: Int): Long =
+    Retry.withBackoff(maxTimeSeconds = retryMaxSeconds,
+      onTokenExpired = () => fetcher.refreshAuth()) {
+      fetcher.count(spec)
+    }
+
+  /** One page under the same I6 contract as [[retriedCount]]. The page is
+    * materialised INSIDE the retried body: a fetcher that streams rows
+    * lazily (or throws TokenExpired from `next()`) would otherwise be
+    * consumed by Spark after `withBackoff` returned, escaping both the
+    * backoff and the token-refresh path.
+    */
+  private[sources] def retriedPage(fetcher: PageFetcher, offset: Long, limit: Int,
+                                   spec: ScanSpec, retryMaxSeconds: Int): Vector[Row] =
+    Retry.withBackoff(maxTimeSeconds = retryMaxSeconds,
+      onTokenExpired = () => fetcher.refreshAuth()) {
+      fetcher.fetch(offset, limit, spec).toVector
+    }
 }
 
 /** In-memory fixture fetcher over `rows` shaped by `schema`: honors every
@@ -133,22 +145,21 @@ class FixtureFetcher(rows: Seq[Row], schema: StructType) extends PageFetcher {
   private def idx(name: String): Int = schema.fieldIndex(name)
 
   private def matching(spec: ScanSpec): Seq[Row] = {
-    var out = rows
-    spec.whereClause.filter(_ != "1=1").foreach { w =>
+    // the fixture's `whereClause` format, "col >= <value>", parsed into the
+    // same (col, value) bound as the structural lowerBound; the ESRI
+    // literal syntax `DATE '2026-01-04'` (LayerSchema.whereClause) is
+    // accepted too
+    val whereBound = spec.whereClause.filter(_ != "1=1").map { w =>
       val Array(colName, rawValue) = w.split(">=").map(_.trim)
-      // accept the ESRI literal syntax `DATE '2026-01-04'` (LayerSchema.whereClause)
-      val value = rawValue.stripPrefix("DATE").trim.stripPrefix("'").stripSuffix("'")
-      val i = idx(colName)
-      // same comparison semantics as the structural lowerBound path below:
-      // null watermark never matches, UTF-8 byte order (Java String `>=` is
-      // UTF-16 code-unit order, which diverges for supplementary chars)
-      out = out.filter(r => !r.isNullAt(i) && utf8Gte(r.getString(i), value))
+      (colName, rawValue.stripPrefix("DATE").trim.stripPrefix("'").stripSuffix("'"))
     }
-    spec.lowerBound.foreach { case (colName, value) =>
+    var out = rows
+    (whereBound ++ spec.lowerBound).foreach { case (colName, value) =>
       val i = idx(colName)
-      // UTF-8 byte order, matching Spark's UTF8String comparison — Java's
-      // UTF-16 code-unit order diverges for supplementary characters, and a
-      // pre-filter that over-drops can't be healed by a post-scan re-check
+      // a null watermark never matches; UTF-8 byte order, matching Spark's
+      // UTF8String comparison — Java's UTF-16 code-unit order diverges for
+      // supplementary characters, and a pre-filter that over-drops can't
+      // be healed by a post-scan re-check
       out = out.filter(r => !r.isNullAt(i) && utf8Gte(r.getString(i), value))
     }
     spec.keys.foreach { case (colName, keySet) =>

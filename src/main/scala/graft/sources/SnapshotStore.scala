@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lexicographically-latest one (`main_pls.py:101-186`, `s3.py:111-121`).
   *
   * Spark-native shape: one directory per run (`<root>/<runTs>/<table>/`,
-  * parquet), latest = max directory name. Parquet per table replaces the
+  * parquet) plus a commit marker; the restore point is the newest
+  * committed run (one rule, [[latestRun]]). Parquet per table replaces the
   * monolithic DB so the next run prunes columns/partitions on read instead
   * of copying everything.
   */
@@ -19,14 +20,9 @@ class SnapshotStore(root: String) {
 
   private val commitMarker = "_graft_committed"
 
-  /** Mark `runId` COMPLETE. Restore-point selection prefers committed
-    * runs, so a run directory only becomes the restore point once every
-    * table is on disk — without the marker, a driver crash mid-write
-    * left a partial run dir that the next run restored from: missing
-    * carried-forward tables read as legitimately-absent (the S8 path)
-    * while the already-written metadata advanced the watermark, so the
-    * dropped delta was never re-fetched. `EtlRun` commits after its last
-    * table write.
+  /** Mark `runId` COMPLETE: the run directory becomes a restore point
+    * only once every table is on disk (see [[latestRun]]). `EtlRun`
+    * commits after its last table write.
     */
   def commit(spark: SparkSession, runId: String): Unit = {
     val out = fs(spark).create(
@@ -37,34 +33,21 @@ class SnapshotStore(root: String) {
   def isCommitted(spark: SparkSession, runId: String): Boolean =
     fs(spark).exists(new org.apache.hadoop.fs.Path(s"$root/$runId/$commitMarker"))
 
-  /** Latest run id under the root, by descending lexicographic order —
-    * the reference's `get_latest_file` selection, hardened: the latest
-    * COMMITTED run wins (see [[commit]]), skipping crashed or in-flight
-    * run dirs. A root with no markers at all (layouts written by direct
-    * [[write]] calls, pre-marker snapshots) prefers the newest run that
-    * carries a `metadata` table — metadata is the LAST table
-    * `EtlRun.run` writes, so on a pre-marker ETL root its presence is
-    * the commit signal, and the one NEW run that crashed mid-write atop
-    * old complete snapshots no longer wins the restore (the partial-
-    * restore bug the marker was added to prevent). Only a root where no
-    * run has a marker OR a metadata table (bare [[write]] layouts, whose
-    * tables carry no completion signal at all) keeps the plain
-    * latest-by-name rule so existing data stays restorable — the residual
-    * risk there is documented, not closable without breaking legacy
-    * roots.
+  /** The restore point: the newest COMMITTED run under the root, by
+    * descending lexicographic order (the reference's `get_latest_file`
+    * rule), else `None`. A run dir without the marker — a crash or a run
+    * still in flight, whatever tables it holds — is never restored from:
+    * its missing carried-forward tables would read as legitimately absent
+    * (the S8 path) while its metadata advanced the watermark past a delta
+    * that was never written.
     */
   def latestRun(spark: SparkSession): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(root)
     val f = fs(spark)
     if (!f.exists(p)) None
-    else {
-      val runs = f.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-        .sorted(Ordering[String].reverse)
-      runs.find(isCommitted(spark, _))
-        .orElse(runs.find(r =>
-          f.exists(new org.apache.hadoop.fs.Path(s"$root/$r/metadata"))))
-        .orElse(runs.headOption)
-    }
+    else f.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
+      .sorted(Ordering[String].reverse)
+      .find(isCommitted(spark, _))
   }
 
   def tablePath(runId: String, table: String): String = s"$root/$runId/$table"

@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In, Is
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sources.{PageFetcher, ScanSpec}
+import graft.sources.{PageFetcher, PagedSource, ScanSpec}
 
 /** DataSource V2 face of the paged-remote-source contract (S3/S4/P2/P7/P8):
   * the same `PageFetcher` + `ScanSpec` that `PagedSource.read` drives
@@ -299,10 +299,8 @@ private[v2] class CountReaderFactory(fetcher: PageFetcher, spec: ScanSpec,
         else {
           done = true; true
         }
-      override def get(): InternalRow = InternalRow(
-        graft.util.Retry.withBackoff(
-          maxTimeSeconds = retryMaxSeconds,
-          onTokenExpired = () => fetcher.refreshAuth()) { fetcher.count(spec) })
+      override def get(): InternalRow =
+        InternalRow(PagedSource.retriedCount(fetcher, spec, retryMaxSeconds))
       override def close(): Unit = ()
     }
 }
@@ -316,12 +314,8 @@ private[v2] class PagedScan(fetcher: PageFetcher, schema: StructType, spec: Scan
     s"PagedScan(spec=$spec, pageSize=$pageSize, limit=$limit)"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // count pushdown (S6), driver-side — retried like the page fetches: a
-    // token expiry here would otherwise fail the whole scan before any
-    // partition is even planned
-    val total0 = graft.util.Retry.withBackoff(
-      maxTimeSeconds = retryMaxSeconds,
-      onTokenExpired = () => fetcher.refreshAuth()) { fetcher.count(spec) }
+    // count pushdown (S6), driver-side
+    val total0 = PagedSource.retriedCount(fetcher, spec, retryMaxSeconds)
     val total = limit.map(l => math.min(l.toLong, total0)).getOrElse(total0)
     (0L until total by pageSize.toLong)
       .map(off => PagePartition(off, math.min(pageSize.toLong, total - off).toInt): InputPartition)
@@ -340,16 +334,8 @@ private[v2] class PageReaderFactory(fetcher: PageFetcher, schema: StructType, sp
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[PagePartition]
     new PartitionReader[InternalRow] {
-      // executor-side I6 (same contract as PagedSource.read): every page
-      // fetch runs under exponential backoff, and an ESRI-498-style
-      // TokenExpired triggers refreshAuth + immediate retry. The page is
-      // materialized INSIDE the retry scope — a lazily-streamed page that
-      // throws mid-iteration must re-auth and retry, not escape the backoff.
-      private val rows = graft.util.Retry.withBackoff(
-        maxTimeSeconds = retryMaxSeconds,
-        onTokenExpired = () => fetcher.refreshAuth()) {
-        fetcher.fetch(part.offset, part.limit, spec).toVector
-      }.iterator
+      private val rows =
+        PagedSource.retriedPage(fetcher, part.offset, part.limit, spec, retryMaxSeconds).iterator
       private var current: InternalRow = _
       override def next(): Boolean =
         if (rows.hasNext) { current = toInternal(rows.next()); true } else false

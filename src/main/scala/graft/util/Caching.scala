@@ -21,12 +21,12 @@ import org.apache.spark.storage.StorageLevel
   * long-lived session holds at most one entry per distinct operator plan,
   * not one per invocation. For deterministic release there are two levels:
   *
-  *   - [[acquire]] returns a release handle bound to its REGISTRATION
-  *     (a monotone epoch, not object identity — the same Dataset object
-  *     can be re-registered after an external unpersist, and its older
-  *     handle must not evict the newer registration). The handle
-  *     unpersists iff its registration is still the current one for both
-  *     the wrapper and the plan; in every other case — the guard found an
+  *   - [[acquire]] returns a release handle bound to its REGISTRATION:
+  *     the canonical plan and a monotone epoch, not object identity (the
+  *     same Dataset object can be re-registered after an external
+  *     unpersist, and its older handle must not evict the newer
+  *     registration). The handle unpersists iff its registration is still
+  *     the plan's current one; in every other case — the guard found an
   *     existing equal-plan entry, the entry was dropped externally, a
   *     newer registration owns the plan — it no-ops: another consumer's
   *     cache is never pulled out from under it.
@@ -34,16 +34,16 @@ import org.apache.spark.storage.StorageLevel
   *     process — the session-teardown hook for a long-lived application
   *     embedding the engine (`SparkEntry.releaseSharedCaches`).
   *
+  * The registry is ONE map, canonical plan -> (wrapper, epoch): acquire
+  * registers only when the plan is uncached, so a plan has at most one
+  * live registration, and a re-registration replaces the stale one.
   * Ownership refs are STRONG, held until release: Spark's own CacheManager
   * already holds every registered plan tree strongly until unpersist (a
   * weak registry here would unpin nothing — it would only let wrapper GC
   * silently disown entries, leaving them unreleasable by [[releaseAll]]
-  * for the session's lifetime). So the registry's footprint tracks the
-  * set of LIVE registrations — what the CacheManager pins anyway — and
-  * wrappers orphaned by direct external unpersists (with or without a
-  * later re-registration of the plan) are swept once the registry crosses
-  * the size gate: an entry is stale exactly when its epoch is no longer
-  * its plan's current one, or its plan is no longer cached at all.
+  * for the session's lifetime). Entries whose cache was dropped directly
+  * (the documented anti-pattern) are swept once the registry crosses the
+  * size gate.
   *
   * All registry transitions run under ONE monitor (acquire's
   * check-then-persist, release, releaseAll, the sweep), so two threads
@@ -54,16 +54,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object Caching {
 
-  // wrapper -> registration epoch, for releaseAll() and handle validity;
-  // plan(canonicalized) -> current registration epoch, so handles and the
-  // sweep can tell a live registration from a superseded one
-  private val owned = new java.util.IdentityHashMap[DataFrame, java.lang.Long]()
-  private val ownerByPlan =
-    new java.util.HashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  // canonical plan -> (registering wrapper, registration epoch)
+  private val owned = new java.util.HashMap[Plan, (DataFrame, Long)]()
   private var epoch = 0L
   private val monitor = new Object
 
-  private def canon(df: DataFrame) = df.queryExecution.analyzed.canonicalized
+  private def canon(df: DataFrame): Plan = df.queryExecution.analyzed.canonicalized
 
   def ensurePersisted(df: DataFrame,
                       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
@@ -82,60 +80,29 @@ object Caching {
         df.persist(level)
         epoch += 1
         val e = epoch
-        owned.put(df, e)
-        ownerByPlan.put(canon(df), e)
-        (df, () => release(df, e))
+        val plan = canon(df)
+        owned.put(plan, (df, e))
+        (df, () => release(plan, e))
       } else (df, () => ())
     }
 
-  private def release(df: DataFrame, e: Long): Unit = monitor.synchronized {
-    // valid only while this registration is current for the WRAPPER (the
-    // same object may have been re-registered after an external unpersist
-    // — identity alone cannot tell the two registrations apart)…
-    val cur = owned.get(df)
-    if (cur != null && cur.longValue == e) {
-      owned.remove(df)
-      val c = canon(df)
-      // …and for the PLAN (a different wrapper over an equal plan may own
-      // the current cache entry)
-      val planCur = ownerByPlan.get(c)
-      if (planCur != null && planCur.longValue == e) {
-        ownerByPlan.remove(c)
-        df.unpersist()
-      }
-      ()
+  private def release(plan: Plan, e: Long): Unit = monitor.synchronized {
+    Option(owned.get(plan)).filter(_._2 == e).foreach { case (df, _) =>
+      owned.remove(plan)
+      df.unpersist()
     }
   }
 
-  // Sweep registry entries whose registration is no longer live: the plan
-  // is uncached (caller unpersisted directly, nothing re-registered), or a
-  // newer registration superseded this epoch (re-registration after a
-  // direct unpersist — storageLevel alone cannot detect this case, since
-  // the by-plan lookup resolves to the NEW entry). Walks all entries
-  // (each an O(#cached) CacheManager lookup), so it is gated behind a
-  // registry-size cap rather than run per registration; correctness never
-  // depends on it — stale handles are already neutralized by the epoch
-  // checks — it only bounds strong-ref accumulation. Caller holds
-  // `monitor`.
+  // Sweep registrations whose cache was dropped directly (caller
+  // unpersisted, nothing re-registered). Walks all entries (each an
+  // O(#cached) CacheManager lookup), so it is gated behind a registry-size
+  // cap rather than run per registration; correctness never depends on it
+  // — stale handles are already neutralized by the epoch check — it only
+  // bounds strong-ref accumulation. Caller holds `monitor`.
   private val PruneThreshold = 64
 
-  private def prune(): Unit = {
-    val stale = new java.util.ArrayList[DataFrame]()
-    owned.forEach { (df, e) =>
-      val current = ownerByPlan.get(canon(df))
-      if (current == null || current.longValue != e.longValue ||
-          df.storageLevel == StorageLevel.NONE)
-        stale.add(df)
-    }
-    stale.forEach { df =>
-      val e = owned.remove(df)
-      val c = canon(df)
-      val current = ownerByPlan.get(c)
-      if (current != null && e != null && current.longValue == e.longValue) {
-        ownerByPlan.remove(c); ()
-      }
-    }
-  }
+  private def prune(): Unit =
+    owned.values().removeIf { case (df, _) => df.storageLevel == StorageLevel.NONE }
 
   /** Registry size, for the sweep's spec only — the count of live
     * registrations (including any stale ones not yet swept).
@@ -170,11 +137,10 @@ object Caching {
     // unpersist inside the monitor: a concurrent acquire must not observe
     // an entry as cached after its registration has been cleared (it
     // would hand out a no-op handle over a cache about to vanish)
-    owned.keySet().forEach { df =>
+    owned.values().forEach { case (df, _) =>
       try df.unpersist()
       catch { case _: Throwable => () } // session may already be stopped
     }
     owned.clear()
-    ownerByPlan.clear()
   }
 }

@@ -99,7 +99,7 @@ class PartitioningSpec extends SparkSpec {
       assert(out.addresses.storageLevel == StorageLevel.MEMORY_AND_DISK)
       assert(out.geocodes.count() == 1L)
       assert(out.addresses.collect().map(_.getString(0)).toSeq == Seq("iri_1"))
-    } finally out.addresses.unpersist()
+    } finally SparkEntry.releaseSharedCaches()
   }
 
   test("vocabWithCmsGate id-less fallback caches for the two actions, then releases") {
@@ -135,6 +135,6 @@ class PartitioningSpec extends SparkSpec {
     val base = idless.select(tokens(normalizeText(col("text"))).as("__tk"))
     assert(base.storageLevel != StorageLevel.NONE,
       "id-less collocations base must be guard-persisted across its three consumers")
-    base.unpersist()
+    SparkEntry.releaseSharedCaches()
   }
 }

@@ -266,7 +266,7 @@ class PlanSpec extends SparkSpec {
       for ((name, df) <- plans)
         assert(df.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
           s"$name did not substitute the shared token-hash layer:\n${df.queryExecution.withCachedData}")
-    } finally fh.unpersist()
+    } finally SparkEntry.releaseSharedCaches()
   }
 
   test("the shared token-string layer is substituted into every text family's plan") {
@@ -292,7 +292,7 @@ class PlanSpec extends SparkSpec {
       for ((name, df) <- plans)
         assert(df.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
           s"$name did not substitute the shared token-string layer:\n${df.queryExecution.withCachedData}")
-    } finally tb.unpersist()
+    } finally SparkEntry.releaseSharedCaches()
   }
 
   test("id-map plans canonicalize stably across invocations — empty() and the entity cache") {
@@ -340,7 +340,7 @@ class PlanSpec extends SparkSpec {
         .get(spark, dir)
       assert(rebuilt.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
         s"rebuilt pair plan not substituted from cache:\n${rebuilt.queryExecution.withCachedData}")
-    } finally pairs.unpersist()
+    } finally SparkEntry.releaseSharedCaches()
   }
 
   test("span-family shuffles carry hashes and positions, never a document text column") {

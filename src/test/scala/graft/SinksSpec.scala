@@ -440,7 +440,7 @@ class SinksSpec extends SparkSpec {
     lock.acquire(); lock.release() // re-acquirable = released by the failed run
   }
 
-  test("latestRun restores the latest COMMITTED run; uncommitted-only roots keep the legacy rule") {
+  test("latestRun restores the latest COMMITTED run; uncommitted-only roots restore nothing") {
     val s = spark; import s.implicits._
     val root = Files.createTempDirectory("snapcommit").toString
     val store = new SnapshotStore(root)
@@ -454,11 +454,14 @@ class SinksSpec extends SparkSpec {
     // once the newer run commits, it wins
     store.commit(s, "2026-02-02T00-00-00")
     assert(store.latestRun(s).contains("2026-02-02T00-00-00"))
-    // marker-free legacy root: plain latest-by-name fallback
-    val legacyRoot = Files.createTempDirectory("snaplegacy").toString
-    val legacy = new SnapshotStore(legacyRoot)
-    legacy.write(df, "r1", "t"); legacy.write(df, "r2", "t")
-    assert(legacy.latestRun(s).contains("r2"))
+    // a root whose runs are all uncommitted is no restore point, whatever
+    // tables the runs hold — with or without the watermark-carrying
+    // metadata table
+    val bare = new SnapshotStore(Files.createTempDirectory("snapbare").toString)
+    bare.write(df, "r1", "t"); bare.write(df, "r2", "t")
+    assert(bare.latestRun(s).isEmpty)
+    bare.write(Seq(("s", "e")).toDF("start_time", "end_time"), "r2", "metadata")
+    assert(bare.latestRun(s).isEmpty)
   }
 }
 

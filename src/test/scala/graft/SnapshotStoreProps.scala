@@ -5,9 +5,9 @@ import org.scalacheck.Prop.forAllNoShrink
 import graft.sources.SnapshotStore
 
 /** Randomized roundtrip for the versioned snapshot store: random typed
-  * frames (nulls included) written under random run-id sets must read
-  * back exactly; `latestRun` picks the lexicographic maximum (the
-  * reference's `get_latest_file` rule — pinned against a driver-side
+  * frames (nulls included) written and committed under random run-id sets
+  * must read back exactly; `latestRun` picks the lexicographic maximum
+  * (the reference's `get_latest_file` rule — pinned against a driver-side
   * string sort, including ids where numeric and lexicographic order
   * disagree); `readIfExists` distinguishes present tables from absent
   * ones per run; and a bucketed write reads back the same rows through
@@ -39,7 +39,7 @@ object SnapshotStoreProps extends Properties("SnapshotStore") {
       val store = new SnapshotStore(root)
       val df = rows.map { case (k, v, d) => (k, v.orNull, d) }.toDF("k", "v", "d")
 
-      runIds.foreach(id => store.write(df, id, "t"))
+      runIds.foreach { id => store.write(df, id, "t"); store.commit(s, id) }
       val latest = store.latestRun(s)
       val wantLatest = runIds.sorted(Ordering[String].reverse).headOption
 

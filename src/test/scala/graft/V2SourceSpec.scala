@@ -33,7 +33,9 @@ private[graft] class RecordingFetcher(rows: Seq[Row], schema: StructType)
 private[graft] class ExpiringFetcher(rows: Seq[Row], schema: StructType)
     extends PageFetcher {
   private val inner = new FixtureFetcher(rows, schema)
-  @volatile private var authed = false
+  // transient: a deserialized copy starts unauthenticated even after the
+  // driver-side count re-authenticated this instance
+  @transient @volatile private var authed = false
   private def guard(): Unit =
     if (!authed) throw new graft.util.Retry.TokenExpired("498: invalid token")
   override def refreshAuth(): Unit = authed = true
@@ -216,12 +218,18 @@ class V2SourceSpec extends SparkSpec {
   }
 
   test("498-style token expiry mid-scan: re-auth + retry returns complete, correct rows") {
-    // planning-time count AND every partition's fetch each hit an expired
-    // token first; the reader's Retry wiring must refreshAuth and retry
-    // rather than fail the scan or drop the page
+    // the count AND every page fetch each hit an expired token first,
+    // through both faces (PagedSource.read and the V2 provider, whose
+    // count runs at planning or, pushed down, in a reader); the one retry
+    // path must refreshAuth and retry rather than fail the scan or drop
+    // the page
+    val viaRead = sources.PagedSource.read(spark, new ExpiringFetcher(rows, schema), schema,
+      pageSize = 10).collect().map(_.toSeq).toSet
     FetcherRegistry.register("rec8", new ExpiringFetcher(rows, schema), schema)
-    val got = readV2("rec8").collect().map(_.toSeq).toSet
-    assert(got === rows.map(_.toSeq).toSet)
+    assert(readV2("rec8").count() === 100L) // pushed down: the count reader
+    val viaV2 = readV2("rec8").collect().map(_.toSeq).toSet
+    assert(viaRead === rows.map(_.toSeq).toSet)
+    assert(viaV2 === viaRead)
   }
 
   test("graded paged_count: pushes to PagedCountScan AND survives a count-on-top wrapper") {
