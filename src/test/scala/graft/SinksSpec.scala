@@ -440,7 +440,7 @@ class SinksSpec extends SparkSpec {
     lock.acquire(); lock.release() // re-acquirable = released by the failed run
   }
 
-  test("latestRun restores the latest COMMITTED run; uncommitted-only roots restore nothing") {
+  test("latestRun is the newest COMMITTED run, else None") {
     val s = spark; import s.implicits._
     val root = Files.createTempDirectory("snapcommit").toString
     val store = new SnapshotStore(root)
