@@ -12,6 +12,13 @@ package graft.sources
   */
 object LayerSchema {
 
+  /** What both remote layers share: the edit-watermark column, `None` once
+    * the layer has lost it.
+    */
+  sealed trait EditedLayerSchema {
+    def lastEditedField: Option[String]
+  }
+
   final case class GeocodeLayerSchema(
     objectIdField: String,
     addressPidField: String,
@@ -19,7 +26,7 @@ object LayerSchema {
     geocodeSourceField: Option[String],
     geocodeStatusField: Option[String],
     lastEditedField: Option[String],
-  )
+  ) extends EditedLayerSchema
 
   private def pick(names: Set[String], preferred: String, fallback: String): Option[String] =
     if (names.contains(preferred)) Some(preferred)
@@ -42,13 +49,11 @@ object LayerSchema {
     )
 
   /** P8 — watermark predicate for the remote scan; degrades to `1=1` (full
-    * scan) when the watermark column is gone.
+    * scan) when the watermark column is gone (`geocode.py:190-202`,
+    * `address_iri_pid_map.py:69-81`).
     */
-  def whereClause(schema: GeocodeLayerSchema, esriDate: Option[String]): String =
-    watermarkClause(schema.lastEditedField, esriDate)
-
-  private def watermarkClause(lastEditedField: Option[String], esriDate: Option[String]): String =
-    (esriDate, lastEditedField) match {
+  def whereClause(schema: EditedLayerSchema, esriDate: Option[String]): String =
+    (esriDate, schema.lastEditedField) match {
       case (Some(d), Some(f)) => s"$f >= DATE '$d'"
       case _ => "1=1"
     }
@@ -57,7 +62,7 @@ object LayerSchema {
     * the caller must drop carried-forward state and rebuild from the full
     * scan.
     */
-  def requiresFullRefresh(schema: GeocodeLayerSchema, esriDate: Option[String]): Boolean =
+  def requiresFullRefresh(schema: EditedLayerSchema, esriDate: Option[String]): Boolean =
     esriDate.isDefined && schema.lastEditedField.isEmpty
 
   /** S4/S5 — the IRI→PID layer's own schema resolution (reference
@@ -71,9 +76,7 @@ object LayerSchema {
     addressIriField: String,
     addressPidField: String,
     lastEditedField: Option[String],
-  ) {
-    def supportsIncrementalImport: Boolean = lastEditedField.isDefined
-  }
+  ) extends EditedLayerSchema
 
   def iriPidSchema(fieldNames: Set[String], objectIdField: Option[String] = None,
                    objectIdFieldName: Option[String] = None): IriPidLayerSchema =
@@ -88,20 +91,4 @@ object LayerSchema {
       lastEditedField =
         if (fieldNames.contains("last_edited_date")) Some("last_edited_date") else None,
     )
-
-  /** P8 twin for the IRI→PID layer — degrades to `1=1` (full refresh) when
-    * the watermark column is gone (`address_iri_pid_map.py:69-81`).
-    */
-  def whereClause(schema: IriPidLayerSchema, esriDate: Option[String]): String =
-    watermarkClause(schema.lastEditedField, esriDate)
-
-  /** Canonical feature normalization: resolved physical names → the stable
-    * (objectid, address_iri, address_pid) string columns downstream tables
-    * key on (`address_iri_pid_map.py:84-95`).
-    */
-  def normalizeIriPidFeature(attrs: Map[String, Any], schema: IriPidLayerSchema): Map[String, String] =
-    Map(
-      "objectid" -> String.valueOf(attrs(schema.objectIdField)),
-      "address_iri" -> String.valueOf(attrs(schema.addressIriField)),
-      "address_pid" -> String.valueOf(attrs(schema.addressPidField)))
 }

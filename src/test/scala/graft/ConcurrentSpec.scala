@@ -7,10 +7,10 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.IdMap
-import graft.pipeline.{EtlRun, PlsPipeline}
+import graft.pipeline.{EtlRun, PlsNightly, PlsPipeline}
 import graft.sinks.Sinks
 import graft.sources.SnapshotStore
 import graft.util.{Concurrent, FileRunLock}
@@ -110,8 +110,18 @@ class ConcurrentSpec extends SparkSpec {
     val root = Files.createTempDirectory("concurrent-groups").toString
     val lock = new FileRunLock("concurrent-groups", Files.createTempDirectory("lock-groups"))
     val (frames, maps) = fiveEntities()
+    val nightlyStore = new SnapshotStore(Files.createTempDirectory("concurrent-nightly").toString)
+    def nightlySources = {
+      val geo = Seq(Row(1L, "p1", "urn:g/pc", 1.0, 2.0, "2026-08-01 00:00:00"))
+      val pid = Seq(Row(1L, "iri-1", "p1", "2026-08-01 00:00:00"))
+      NightlyFixture.sources(spark, Seq(("iri-1", "p1", "s1")),
+        NightlyFixture.layer(pid, NightlyFixture.pidSchema)._2,
+        NightlyFixture.layer(geo, NightlyFixture.geoSchema)._2)
+    }
     // two passes under different groups: a pool shared across calls would
-    // run the second pass on threads that still carry the first group
+    // run the second pass on threads that still carry the first group. Each
+    // pass also makes a whole PlsNightly run (which calls both), the second
+    // restoring the first one's snapshot
     def pass(group: String, at: Instant): Unit = {
       sc.setJobGroup(group, s"ConcurrentSpec $group")
       try {
@@ -123,6 +133,10 @@ class ConcurrentSpec extends SparkSpec {
           "topic", () => Map("address" -> enc("address"), "id_map_road" -> m("road"),
             "tiny" -> Seq(1, 2).toDF("n")),
           now = () => times.next())
+        val nightlyTimes = Iterator(at.plusSeconds(40), at.plusSeconds(50), at.plusSeconds(51))
+        PlsNightly.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"), lock,
+          nightlyStore, new Sinks.FakeArtifactStore, new Sinks.CollectingNotifier(), "topic",
+          nightlySources, now = () => nightlyTimes.next())
         ()
       } finally sc.clearJobGroup()
     }

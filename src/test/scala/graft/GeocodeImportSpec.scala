@@ -57,12 +57,12 @@ class GeocodeImportSpec extends SparkSpec {
     val live = LayerSchema.iriPidSchema(
       Set("objectid", "iri", "pid", "last_edited_date"), objectIdField = Some("objectid"))
     assert(live == LayerSchema.IriPidLayerSchema("objectid", "iri", "pid", Some("last_edited_date")))
-    assert(live.supportsIncrementalImport)
+    assert(!LayerSchema.requiresFullRefresh(live, Some("2026-04-14 00:00:00")))
     // drift: long forms accepted; short forms preferred when BOTH exist
     val drift = LayerSchema.iriPidSchema(Set("oid", "address_iri", "address_pid"),
       objectIdFieldName = Some("oid"))
     assert(drift == LayerSchema.IriPidLayerSchema("oid", "address_iri", "address_pid", None))
-    assert(!drift.supportsIncrementalImport)
+    assert(LayerSchema.requiresFullRefresh(drift, Some("2026-04-14 00:00:00")))
     val both = LayerSchema.iriPidSchema(Set("iri", "address_iri", "pid", "address_pid"))
     assert(both.addressIriField == "iri" && both.addressPidField == "pid")
     intercept[RuntimeException](LayerSchema.iriPidSchema(Set("pid")))      // no iri field
@@ -72,11 +72,7 @@ class GeocodeImportSpec extends SparkSpec {
     assert(LayerSchema.whereClause(live, Some("2026-04-14 00:00:00")) ==
       "last_edited_date >= DATE '2026-04-14 00:00:00'")
     assert(LayerSchema.whereClause(drift, Some("2026-04-14 00:00:00")) == "1=1")
-    // normalization to canonical string columns (reference :52-74)
-    val norm = LayerSchema.normalizeIriPidFeature(
-      Map("objectid" -> 7, "iri" -> "https://example.com/address/1", "pid" -> 42), live)
-    assert(norm == Map("objectid" -> "7",
-      "address_iri" -> "https://example.com/address/1", "address_pid" -> "42"))
+    // normalization to string columns (reference :52-74): see TwoRunSpec's M4 case
   }
 
   test("full refresh on watermark loss: carried state cleared, all rows fetched") {

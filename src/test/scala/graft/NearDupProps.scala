@@ -94,8 +94,8 @@ object NearDupProps extends Properties("NearDup") {
         a < b && jaccard(sh(a), sh(b)).exists(dj => dj == j && dj >= threshold) }
       val noDups = got.map(t => (t._1, t._2)).distinct.length == got.length
       val pairSet = got.map(t => (t._1, t._2)).toSet
-      val complete = rows.combinations(2).forall { case Seq((ia, _), (ib, _)) =>
-        val (a, b) = if (ia < ib) (ia, ib) else (ib, ia)
+      val complete = rows.map(_._1).combinations(2).forall { pair =>
+        val (a, b) = (pair.min, pair.max)
         sh(a).isEmpty || sh(a) != sh(b) || pairSet.contains((a, b))
       }
       sound && noDups && complete

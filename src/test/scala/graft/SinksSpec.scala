@@ -147,15 +147,21 @@ class SinksSpec extends SparkSpec {
   }
 
   test("watermark loss degrades to full refresh (I3/M4)") {
-    val withWm = LayerSchema.geocodeSchema(Set("pid", "type", "last_edited_date"))
-    val noWm = LayerSchema.geocodeSchema(Set("pid", "type"))
-    assert(LayerSchema.whereClause(withWm, Some("2026-01-01 00:00:00")) ==
-      "last_edited_date >= DATE '2026-01-01 00:00:00'")
-    assert(LayerSchema.whereClause(noWm, Some("2026-01-01 00:00:00")) == "1=1")
-    assert(LayerSchema.whereClause(withWm, None) == "1=1")
-    assert(LayerSchema.requiresFullRefresh(noWm, Some("x")))
-    assert(!LayerSchema.requiresFullRefresh(withWm, Some("x")))
-    assert(!LayerSchema.requiresFullRefresh(noWm, None))
+    // the geocode and the IRI->PID layer follow one rule
+    val layers = Seq(
+      LayerSchema.geocodeSchema(Set("pid", "type", "last_edited_date")) ->
+        LayerSchema.geocodeSchema(Set("pid", "type")),
+      LayerSchema.iriPidSchema(Set("iri", "pid", "last_edited_date")) ->
+        LayerSchema.iriPidSchema(Set("iri", "pid")))
+    layers.foreach { case (withWm, noWm) =>
+      assert(LayerSchema.whereClause(withWm, Some("2026-01-01 00:00:00")) ==
+        "last_edited_date >= DATE '2026-01-01 00:00:00'")
+      assert(LayerSchema.whereClause(noWm, Some("2026-01-01 00:00:00")) == "1=1")
+      assert(LayerSchema.whereClause(withWm, None) == "1=1")
+      assert(LayerSchema.requiresFullRefresh(noWm, Some("x")))
+      assert(!LayerSchema.requiresFullRefresh(withWm, Some("x")))
+      assert(!LayerSchema.requiresFullRefresh(noWm, None))
+    }
   }
 
   test("retry: transient errors back off then succeed; token refresh retries immediately") {

@@ -3,88 +3,115 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
-import graft.operators.IdMap
-import graft.pipeline.{EtlRun, PlsPipeline}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+import graft.pipeline.{EtlRun, PlsNightly}
 import graft.sinks.Sinks
 import graft.sources.SnapshotStore
 import graft.util.FileRunLock
+import NightlyFixture.{geoSchema, layer, pidSchema}
 
-/** Two consecutive ETL runs through the real snapshot store — the
-  * reference's core cross-run behavior (`main_pls.py:101-186`): run 2
-  * restores run 1's snapshot (S7, latest-by-key-desc), reads the watermark
-  * from its metadata (I1), carries state forward (U3/M5), upserts the delta
-  * (M1/M3), and keeps surrogate ids stable (M6). No fakes on the storage
-  * path — parquet in a temp dir.
+/** Two consecutive nightly runs through [[PlsNightly.run]] and the real
+  * snapshot store — the reference's core cross-run behavior
+  * (`main_pls.py:101-186`): run 2 restores run 1's snapshot (S7), reads the
+  * watermark from its metadata (I1), carries state forward (U3/M5),
+  * upserts the delta (M1/M3), and keeps surrogate ids stable (M6). No
+  * fakes on the storage path — parquet in a temp dir.
   */
 class TwoRunSpec extends SparkSpec {
 
+  private val t0 = Instant.parse("2026-08-01T00:00:00Z")
+  private val before = "2026-07-30 00:00:00" // edited before run 1 started
+  private val after = "2026-08-01 05:00:00"  // edited after run 1 started
+  private val watermarkClause = "last_edited_date >= DATE '2026-08-01 00:00:00'"
+
+  private val addr1 = Seq(("iri-1", "p1", "s1"), ("iri-2", "p2", "s2"))
+  private val addr2 = addr1.take(1) ++ Seq(("iri-2", "p2b", "s2b"), ("iri-3", "p3", "s3"))
+  private val geo1 = Seq(Row(1L, "p1", "urn:g/pc", 1.0, 2.0, before),
+                         Row(2L, "p2", "urn:g/pc", 3.0, 4.0, before))
+  // geocode 2 re-edited (SP, p2b), 3 new
+  private val geo2 = geo1.take(1) ++ Seq(Row(2L, "p2b", "urn:g/sp", 5.0, 6.0, after),
+                                         Row(3L, "p3", "urn:g/sp", 7.0, 8.0, after))
+
+  private final class Runs {
+    val store = new SnapshotStore(Files.createTempDirectory("tworun").toString)
+    val artifacts = new Sinks.FakeArtifactStore
+    private val lock = new FileRunLock("tworun", Files.createTempDirectory("tworun-lock"))
+
+    def run(sources: PlsNightly.Sources, at: Instant): EtlRun.Result = {
+      val times = Iterator(at, at.plusSeconds(60), at.plusSeconds(61))
+      PlsNightly.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"), lock, store,
+        artifacts, new Sinks.CollectingNotifier(), "t", sources, now = () => times.next())
+    }
+
+    def table(r: EtlRun.Result, t: String): DataFrame = spark.read.parquet(store.tablePath(r.runId, t))
+
+    def ids(r: EtlRun.Result): Map[String, Long] =
+      table(r, "id_map_address").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    /** Run 1: a cold start over both full layers. */
+    def first(): EtlRun.Result = {
+      val pid1 = Seq(Row(1L, "iri-1", "p1", before), Row(2L, "iri-2", "p2", before))
+      run(NightlyFixture.sources(spark, addr1, layer(pid1, pidSchema)._2, layer(geo1, geoSchema)._2), t0)
+    }
+  }
+
   test("run 2 restores run 1's snapshot and preserves state invariants") {
     val s = spark; import s.implicits._
-    val root = Files.createTempDirectory("tworun").toString
-    val store = new SnapshotStore(root)
-    val lock = new FileRunLock("tworun", Files.createTempDirectory("tworun-lock"))
-    val artifacts = new Sinks.FakeArtifactStore
-    val t0 = Instant.parse("2026-08-01T00:00:00Z")
+    val runs = new Runs
+    val r1 = runs.first()
+    assert(r1.startTime == "2026-08-01T10:00:00+1000") // I1 watermark source
 
-    // ---- run 1: cold start (no previous snapshot) ----
-    assert(store.latestRun(spark).isEmpty)
-    val pid1 = Seq(("iri-1", "p1"), ("iri-2", "p2")).toDF("address_iri", "address_pid")
-    val addr1 = Seq(("iri-1", "p1", "s1"), ("iri-2", "p2", "s2"))
-      .toDF("address_iri", "address_pid", "site_id")
-    val geo1 = Seq(("g1", "PC", "p1", Option.empty[String], 1.0, 2.0),
-                   ("g2", "PC", "p2", Option.empty[String], 3.0, 4.0))
-      .toDF("geocode_id", "geocode_type", "address_pid", "site_id", "centoid_lat", "centoid_lon")
-    val map1 = IdMap.extend(IdMap.empty(spark), addr1.select(col("address_iri").as("pk")), "pk")
-
-    val times1 = Iterator(t0, t0.plusSeconds(60), t0.plusSeconds(61))
-    val out1 = PlsPipeline.run(PlsPipeline.RunInputs(None, None, pid1, geo1, addr1))
-    val r1 = EtlRun.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"),
-      lock, store, artifacts, new Sinks.CollectingNotifier(), "t",
-      () => Map("geocodes" -> out1.geocodes, "addresses" -> out1.addresses,
-        "pid_map" -> out1.pidMap, "id_map_address" -> map1),
-      now = () => times1.next())
-
-    // ---- run 2: restore, watermark, carry forward, delta upsert ----
-    val latest = store.latestRun(spark)
-    assert(latest.contains(r1.runId))
-    val prevMeta = store.read(spark, latest.get, "metadata").head()
-    assert(prevMeta.getString(0) == "2026-08-01T10:00:00+1000") // I1 watermark source
-    val prevPid = store.readIfExists(spark, latest.get, "pid_map")
-    val prevGeo = store.readIfExists(spark, latest.get, "geocodes")
-    val prevMap = store.readIfExists(spark, latest.get, "id_map_address").get
-    assert(prevPid.isDefined && prevGeo.isDefined)
-    assert(store.readIfExists(spark, latest.get, "not_a_table").isEmpty) // S8
-
-    // delta: iri-2 remapped, iri-3 new; g2 re-imported, g3 new
-    val pid2 = Seq(("iri-2", "p2b"), ("iri-3", "p3")).toDF("address_iri", "address_pid")
-    val addr2 = Seq(("iri-1", "p1", "s1"), ("iri-2", "p2b", "s2b"), ("iri-3", "p3", "s3"))
-      .toDF("address_iri", "address_pid", "site_id")
-    val geo2 = Seq(("g2", "SP", "p2b", Option.empty[String], 5.0, 6.0),
-                   ("g3", "SP", "p3", Option.empty[String], 7.0, 8.0))
-      .toDF("geocode_id", "geocode_type", "address_pid", "site_id", "centoid_lat", "centoid_lon")
-
-    val out2 = PlsPipeline.run(PlsPipeline.RunInputs(
-      prevGeo, prevPid, pid2, geo2, addr2))
-    val map2 = IdMap.extend(prevMap, addr2.select(col("address_iri").as("pk")), "pk")
+    // delta: iri-2 remapped and iri-3 new, both edited after run 1 started
+    val (pidFetch, pid2) = layer(Seq(Row(1L, "iri-1", "p1", before),
+      Row(2L, "iri-2", "p2b", after), Row(3L, "iri-3", "p3", after)), pidSchema)
+    val (geoFetch, geo) = layer(geo2, geoSchema)
+    val r2 = runs.run(NightlyFixture.sources(spark, addr2, pid2, geo), t0.plusSeconds(86400))
+    // both scans got the watermark from run 1's metadata start_time
+    assert(pidFetch.wheres.toSeq == Seq(watermarkClause))
+    assert(geoFetch.wheres.toSeq == Seq(watermarkClause))
 
     // pid map: upserted (iri-2 -> p2b), carried (iri-1), new (iri-3)
-    val pids = out2.pidMap.orderBy("address_iri").as[(String, String)].collect().toSeq
+    val pids = runs.table(r2, "pid_map").orderBy("address_iri").as[(String, String)].collect().toSeq
     assert(pids == Seq(("iri-1", "p1"), ("iri-2", "p2b"), ("iri-3", "p3")))
-    // geocodes: g1 carried (site nulled then backfilled from addr1's s1),
-    // g2 incoming wins (SP, p2b -> s2b), g3 new (p3 -> s3)
-    val geos = out2.geocodes.orderBy("geocode_id")
+    // geocodes: 1 carried (site nulled then backfilled from the listing's
+    // s1), 2 incoming wins (SP, p2b -> s2b), 3 new (p3 -> s3)
+    val geos = runs.table(r2, "geocodes").orderBy("geocode_id")
       .select("geocode_id", "geocode_type", "address_pid", "site_id")
       .collect().toSeq
-    assert(geos == Seq(Row("g1", "PC", "p1", "s1"), Row("g2", "SP", "p2b", "s2b"),
-      Row("g3", "SP", "p3", "s3")))
+    assert(geos == Seq(Row("1", "PC", "p1", "s1"), Row("2", "SP", "p2b", "s2b"),
+      Row("3", "SP", "p3", "s3")))
     // id map: run-1 assignments unchanged, iri-3 got the next id (M6)
-    val ids1 = map1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ids2 = map2.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (ids1, ids2) = (runs.ids(r1), runs.ids(r2))
+    assert(ids1 == Map("iri-1" -> 1L, "iri-2" -> 2L))
     assert(ids1.forall { case (k, v) => ids2(k) == v })
     assert(ids2("iri-3") == 3L)
     // artifact contract: run-1 upload preceded run-2, key embeds Brisbane end time
-    assert(artifacts.uploads.head._3 == s"pls-etl/${r1.runId}/geocodes")
+    assert(runs.artifacts.uploads.head._3 == s"pls-etl/${r1.runId}/geocodes")
+    // metadata times with microseconds convert too
+    assert(PlsNightly.esriDatetime("2026-08-01T10:00:00.250000+1000") == "2026-08-01 00:00:00")
+  }
+
+  test("run 2 rebuilds pid_map from a full scan when the IRI→PID layer lost its watermark (M4)") {
+    val s = spark; import s.implicits._
+    val runs = new Runs
+    runs.first()
+
+    // the layer drifted to long names and a numeric pid and lost
+    // last_edited_date; iri-2 is gone from it
+    val drifted = StructType(Seq(StructField("objectid", LongType),
+      StructField("address_iri", StringType), StructField("address_pid", LongType)))
+    val (pidFetch, pid2) = layer(Seq(Row(1L, "iri-1", 41L), Row(3L, "iri-3", 42L)), drifted)
+    val (geoFetch, geo) = layer(geo2, geoSchema)
+    val r2 = runs.run(NightlyFixture.sources(spark, addr2, pid2, geo), t0.plusSeconds(86400))
+    assert(pidFetch.wheres.toSeq == Seq("1=1"))
+    assert(geoFetch.wheres.toSeq == Seq(watermarkClause)) // still incremental
+
+    // exactly the full scan's pairs, F7 string casts: no carried iri-2
+    val pids = runs.table(r2, "pid_map").orderBy("address_iri").as[(String, String)].collect().toSeq
+    assert(pids == Seq(("iri-1", "41"), ("iri-3", "42")))
+    // the incremental geocode import still carried geocode 1 forward
+    val geoIds = runs.table(r2, "geocodes").select("geocode_id").as[String].collect().sorted.toSeq
+    assert(geoIds == Seq("1", "3")) // 2's address p2b lost its pid mapping and was pruned
   }
 }
