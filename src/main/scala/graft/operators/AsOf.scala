@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *     intermediate blow-up, and the sort is Spark's own spillable
   *     UnsafeExternalSorter;
   *   - both inputs shuffle-hash-partition on the SAME key, so AQE coalesces
-  *     partitions and a pre-bucketed layout (SnapshotStore.writeBucketed)
-  *     avoids the exchange entirely;
+  *     partitions and inputs already partitioned on the key avoid the
+  *     exchange entirely;
   *   - a pathologically hot key serializes into one partition (window
   *     semantics require it); the standard mitigation is range-splitting the
   *     ordinate per hot key upstream (process month-slices with a carried

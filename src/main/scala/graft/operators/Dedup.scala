@@ -257,9 +257,7 @@ object Dedup {
     * both sides on `fp` — the incoming batch is typically a small
     * fraction of the corpus, so AQE broadcasts it against the baseline
     * fingerprint scan. Steady-state cost is one baseline fingerprint
-    * scan per batch; a production run persists the fingerprint column
-    * bucketed by `fp` (`SnapshotStore.writeBucketed`) so the anti join
-    * co-locates without any baseline shuffle at all.
+    * scan per batch.
     */
   def dedupAgainstBaseline(incoming: DataFrame, baseline: DataFrame,
                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

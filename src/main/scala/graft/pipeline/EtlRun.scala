@@ -26,7 +26,7 @@ object EtlRun {
     etlName: String,
     bucket: String,
     keyPrefix: String,          // reference: "pls-etl/"
-    artifactName: String,       // reference: "pls.db"; here the snapshot run id
+    artifactName: String,       // reference: "pls.db"; S3 key suffix of the uploaded run dir
     presignedUrlExpirySeconds: Int = 3600,
   )
 
@@ -101,9 +101,11 @@ object EtlRun {
       store.write(metadata, runId, "metadata")
       store.commit(spark, runId)
 
-      // K2 → K3, strictly in this order
+      // K2 → K3, strictly in this order. The artifact is the whole
+      // committed run directory (every table, metadata, marker), as the
+      // reference uploads its whole pls.db (`main_pls.py:193-218`)
       val s3Key = s"${config.keyPrefix}$endStr/${config.artifactName}"
-      val presigned = artifacts.upload(store.tablePath(runId, config.artifactName),
+      val presigned = artifacts.upload(store.runPath(runId),
         config.bucket, s3Key, config.presignedUrlExpirySeconds)
       val uploadedAt = now()
       val headers = Sinks.buildArtifactHeaders(

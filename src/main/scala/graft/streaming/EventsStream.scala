@@ -98,9 +98,6 @@ object EventsStream {
     * mutable baseline source would make batch output depend on WHEN cache
     * blocks evict (frozen-until-eviction, then silently refreshed) — to
     * pick up a newer baseline, restart the query against the new snapshot.
-    * At even larger baselines, point it at a bucketed fingerprint snapshot
-    * (`SnapshotStore.writeBucketed`) so the cache fill itself reads
-    * pre-partitioned fingerprints instead of re-aggregating the corpus.
     */
   def dedupAgainstBaselineStream(docs: DataFrame, baseline: DataFrame,
                                  textCol: String = "text"): DataFrame = {

@@ -55,11 +55,16 @@ class SinksSpec extends SparkSpec {
 
     val result = EtlRun.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"),
       lock, store, artifacts, notifier, "topic-1",
-      () => Map("geocodes" -> Seq(("g1", "p1")).toDF("geocode_id", "address_pid")),
+      () => Map("geocodes" -> Seq(("g1", "p1")).toDF("geocode_id", "address_pid"),
+        "address" -> Seq(("a1", "p1")).toDF("address_id", "address_pid")),
       now = () => times.next())
 
     assert(result.s3Key == "pls-etl/2026-08-12T10:01:30+1000/geocodes")
     assert(artifacts.uploads.map(_._3).toSeq == Seq(result.s3Key)) // uploaded before publish
+    // the artifact is the whole committed run dir, not one table
+    assert(artifacts.uploads.head._1 == store.runPath(result.runId))
+    assert(Set("geocodes", "address", "metadata", "_graft_committed")
+      .subsetOf(new java.io.File(artifacts.uploads.head._1).list().toSet))
     assert(notifier.records.map(r => (r._1, r._2)).toSeq == Seq(("topic-1", result.presignedUrl)))
     assert(notifier.records.head._3("etl-duration-seconds") == "90.000")
     // K4: metadata rode inside the snapshot; next run reads the watermark from it
@@ -237,29 +242,6 @@ class SinksSpec extends SparkSpec {
     val out = PagedSource.read(spark, fetcher, schema, pageSize = 2)
     assert(out.collect().map(_.getString(0)).toSeq == Seq("row-0"))
     assert(LazyFetcherState.authed.get())
-  }
-
-  test("bucketed snapshot tables join WITHOUT a shuffle on either side") {
-    val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("bucketed-snap")
-    val store = new graft.sources.SnapshotStore(dir.toString)
-    val prev = (1L to 1000L).map(i => (i, s"prev_$i")).toDF("k", "pv")
-    val cur = (500L to 1500L).map(i => (i, s"cur_$i")).toDF("k", "cv")
-    val tPrev = store.writeBucketed(prev, "run1", "prev", "k", 8)
-    val tCur = store.writeBucketed(cur, "run1", "cur", "k", 8)
-    // disable broadcast so the join would otherwise need a full shuffle
-    val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table(tPrev).join(spark.table(tCur), Seq("k"))
-      val physical = joined.queryExecution.executedPlan.toString
-      assert(!physical.contains("Exchange"), s"bucketed join still shuffles:\n$physical")
-      assert(joined.count() == 501)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
-      spark.sql(s"DROP TABLE IF EXISTS $tPrev")
-      spark.sql(s"DROP TABLE IF EXISTS $tCur")
-    }
   }
 
   test("run lock: held lock blocks, expired lock is reclaimable") {
