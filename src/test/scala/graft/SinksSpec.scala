@@ -3,6 +3,8 @@ package graft
 import java.time.Instant
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.EtlRun
 import graft.sinks.Sinks
 import graft.sources.SnapshotStore
@@ -65,6 +67,10 @@ class SinksSpec extends SparkSpec {
     assert(artifacts.uploads.head._1 == store.runPath(result.runId))
     assert(Set("geocodes", "address", "metadata", "_graft_committed")
       .subsetOf(new java.io.File(artifacts.uploads.head._1).list().toSet))
+    // no Hadoop job markers ride along to consumers
+    val uploaded = Files.walk(java.nio.file.Paths.get(artifacts.uploads.head._1))
+    try assert(!uploaded.iterator().asScala.exists(_.getFileName.toString.contains("_SUCCESS")))
+    finally uploaded.close()
     assert(notifier.records.map(r => (r._1, r._2)).toSeq == Seq(("topic-1", result.presignedUrl)))
     assert(notifier.records.head._3("etl-duration-seconds") == "90.000")
     // K4: metadata rode inside the snapshot; next run reads the watermark from it
@@ -133,7 +139,7 @@ class SinksSpec extends SparkSpec {
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("poisoned row in stage write")))
     assert(inFlight.get == 0) // every write had ended when run returned
-    assert(new java.io.File(store.tablePath(failedRunId, "slow"), "_SUCCESS").exists())
+    assert(store.read(spark, failedRunId, "slow").count() == 2) // "slow" finished its write
     assert(!new java.io.File(store.tablePath(failedRunId, "metadata")).exists())
     assert(!store.isCommitted(spark, failedRunId))
     assert(store.latestRun(spark).contains(committed.runId))

@@ -5,6 +5,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.operators.IdMap
 import graft.pipeline.{EtlRun, PlsNightly}
 import graft.sinks.Sinks
 import graft.sources.SnapshotStore
@@ -34,26 +35,32 @@ class TwoRunSpec extends SparkSpec {
                                          Row(3L, "p3", "urn:g/sp", 7.0, 8.0, after))
 
   private final class Runs {
-    val store = new SnapshotStore(Files.createTempDirectory("tworun").toString)
+    val root: String = Files.createTempDirectory("tworun").toString
+    val store = new SnapshotStore(root)
     val artifacts = new Sinks.FakeArtifactStore
     private val lock = new FileRunLock("tworun", Files.createTempDirectory("tworun-lock"))
 
-    def run(sources: PlsNightly.Sources, at: Instant): EtlRun.Result = {
+    def run(sources: PlsNightly.Sources, at: Instant, via: SnapshotStore = store): EtlRun.Result = {
       val times = Iterator(at, at.plusSeconds(60), at.plusSeconds(61))
-      PlsNightly.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"), lock, store,
+      PlsNightly.run(spark, EtlRun.Config("pls", "bkt", "pls-etl/", "geocodes"), lock, via,
         artifacts, new Sinks.CollectingNotifier(), "t", sources, now = () => times.next())
     }
 
     def table(r: EtlRun.Result, t: String): DataFrame = spark.read.parquet(store.tablePath(r.runId, t))
 
-    def ids(r: EtlRun.Result): Map[String, Long] =
-      table(r, "id_map_address").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def ids(r: EtlRun.Result, entity: String = "address"): Map[String, Long] =
+      table(r, s"id_map_$entity").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     /** Run 1: a cold start over both full layers. */
-    def first(): EtlRun.Result = {
+    def first(via: SnapshotStore = store): EtlRun.Result = {
       val pid1 = Seq(Row(1L, "iri-1", "p1", before), Row(2L, "iri-2", "p2", before))
-      run(NightlyFixture.sources(spark, addr1, layer(pid1, pidSchema)._2, layer(geo1, geoSchema)._2), t0)
+      run(NightlyFixture.sources(spark, addr1, layer(pid1, pidSchema)._2, layer(geo1, geoSchema)._2),
+        t0, via)
     }
+
+    /** The table directories of run `r`. */
+    def tables(r: EtlRun.Result): Seq[String] =
+      new java.io.File(store.runPath(r.runId)).listFiles().toSeq.filter(_.isDirectory).map(_.getPath)
   }
 
   test("run 2 restores run 1's snapshot and preserves state invariants") {
@@ -113,5 +120,32 @@ class TwoRunSpec extends SparkSpec {
     // the incremental geocode import still carried geocode 1 forward
     val geoIds = runs.table(r2, "geocodes").select("geocode_id").as[String].collect().sorted.toSeq
     assert(geoIds == Seq("1", "3")) // 2's address p2b lost its pid mapping and was pruned
+  }
+
+  test("run 2 restores a snapshot written in the previous format (v1 pages, unsorted)") {
+    val runs = new Runs
+    // the snapshot the night before this format shipped: zstd, v1 pages, no sort
+    val previous = new SnapshotStore(runs.root) {
+      override def write(df: DataFrame, runId: String, table: String): Unit =
+        df.write.mode("overwrite").option("compression", "zstd").parquet(tablePath(runId, table))
+    }
+    val r1 = runs.first(previous)
+    assert(runs.tables(r1).exists(t => !SnapshotStoreProps.snapshotFormat(t)))
+
+    val (_, pid2) = layer(Seq(Row(1L, "iri-1", "p1", before),
+      Row(2L, "iri-2", "p2b", after), Row(3L, "iri-3", "p3", after)), pidSchema)
+    val r2 = runs.run(NightlyFixture.sources(spark, addr2, pid2, layer(geo2, geoSchema)._2),
+      t0.plusSeconds(86400))
+    PlsNightly.Entities.foreach { e =>
+      val (ids1, ids2) = (runs.ids(r1, e), runs.ids(r2, e))
+      assert(ids1.nonEmpty && ids1.forall { case (k, v) => ids2(k) == v }, e)
+    }
+    assert(runs.ids(r2)("iri-3") == 3L)
+    // run 2 wrote every table in the new format
+    assert(runs.tables(r2).size == runs.tables(r1).size)
+    runs.tables(r2).foreach(t => assert(SnapshotStoreProps.snapshotFormat(t), t))
+    val keys = SnapshotStoreProps.fileRows(s"${runs.store.runPath(r2.runId)}/id_map_address", IdMap.KEY)
+      .map(_.map(_.getString(0)))
+    assert(keys.forall(k => k == k.sorted))
   }
 }
